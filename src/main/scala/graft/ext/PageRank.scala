@@ -38,8 +38,9 @@ object PageRank {
     * materialization: the checkpoint freezes HALF the rows and the other
     * half is derived per scan by a narrow column-swap projection over the
     * same frozen blocks — at any scale that halves the block-store write
-    * and the resident edge copy (measured r19: the materialization is
-    * ~50% of the gate's steady cost at sf0.1; see OPTIMIZATION_r19.md).
+    * and the resident edge copy. No before/after layer split of the flag
+    * was recorded when it landed; the `graph_pagerank` bench time at 32
+    * cores moved 2.42 → 2.34 s, inside that bench's noise band.
     */
   def pageRank(edges: DataFrame, iterations: Int,
                damping: Double = 0.85, noDangling: Boolean = false,

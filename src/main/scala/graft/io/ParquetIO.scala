@@ -1,7 +1,10 @@
 package graft.io
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, pmod, spark_partition_id, xxhash64}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 /** Partitioned parquet sources/sinks (SURVEY.md §2a S4, K1–K2).
   *
@@ -15,11 +18,42 @@ object ParquetIO {
 
   /** S4 — read one (or any) Hive partition by predicate, pruning at the
     * file index. `partitionFilters` e.g. Map("dataproc" -> "20240501").
+    *
+    * A caller that knows the files' `schema` (data columns in file order
+    * plus the partition columns) passes it: the read then skips footer
+    * inference, which is one Spark job per read. Without it the schema is
+    * inferred from the footers and partition values get inferred types.
     */
   def readPartitioned(spark: SparkSession, root: String,
-                      partitionFilters: Map[String, String] = Map.empty): DataFrame = {
-    val base = spark.read.option("basePath", root).parquet(root)
+                      partitionFilters: Map[String, String] = Map.empty,
+                      schema: Option[StructType] = None): DataFrame = {
+    val reader = schema.fold(spark.read)(spark.read.schema)
+    val base = reader.option("basePath", root).parquet(root)
     partitionFilters.foldLeft(base) { case (df, (k, v)) => df.filter(col(k) === v) }
+  }
+
+  /** Bytes under `path` from file-system metadata (driver-side, no job);
+    * 0 when nothing is there.
+    */
+  def onDiskBytes(spark: SparkSession, path: String): Long = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
+  }
+
+  /** Partition count for `inputBytes` of input: one partition per
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`, clamped to
+    * [1, `spark.sql.shuffle.partitions`]. The bytes are what the driver
+    * already knows: [[onDiskBytes]] for files, or a driver-built
+    * relation's plan statistics. A relation without statistics reports
+    * `spark.sql.defaultSizeInBytes` (Long.MaxValue by default), so it gets
+    * the session's full partition count.
+    */
+  def sizedPartitions(spark: SparkSession, inputBytes: BigInt): Int = {
+    val conf = spark.sessionState.conf
+    val target = BigInt(conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+    val wanted = (inputBytes + target - 1) / target
+    wanted.max(1).min(conf.numShufflePartitions).toInt
   }
 
   /** Shared writer chain so the sibling sinks can't silently diverge on
@@ -91,11 +125,9 @@ object ParquetIO {
     */
   def compact(spark: SparkSession, inPath: String, outPath: String,
               targetBytes: Long = 256L * 1024 * 1024,
-              schema: Option[org.apache.spark.sql.types.StructType] = None): Unit = {
+              schema: Option[StructType] = None): Unit = {
     require(targetBytes > 0)
-    val fs = new org.apache.hadoop.fs.Path(inPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val totalBytes = fs.getContentSummary(new org.apache.hadoop.fs.Path(inPath)).getLength
+    val totalBytes = onDiskBytes(spark, inPath)
     val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
     // callers that know the table's schema pass it and skip footer
     // inference — at object-store scale that is a listing + ranged GET

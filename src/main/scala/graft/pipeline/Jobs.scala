@@ -17,8 +17,36 @@ import graft.ops._
   * amplification"): no repeated count()/show() actions recomputing the plan,
   * no double catalog+path write, agg-join-back realized as one-shuffle
   * window aggregates.
+  *
+  * Right-sizing: each job derives one partition count `n` from its input
+  * with [[ParquetIO.sizedPartitions]] — input bytes over
+  * `spark.sql.adaptive.advisoryPartitionSizeInBytes`, clamped to
+  * [1, `spark.sql.shuffle.partitions`]. The bytes come from what the driver
+  * already knows: file-system metadata for file inputs, plan statistics
+  * for driver-built relations. A source without statistics (the
+  * RDD-backed HTTP sources) gets the session's full partition count. The
+  * extract writes coalesce to `n`, and each transform shuffles exactly
+  * once, with `repartition(n, key)` on a key that satisfies every later
+  * operator: `setor` for stocks (per-sector aggregates, then the lag over
+  * `(setor, codigoAcao)`, which is the per-ticker lag because each ticker
+  * has one sector, see [[Model.requireUniqueTickers]]), `link` for news
+  * (full-row distinct, then the keyed dedup). Hash-partitioning on the
+  * sector also makes the writer emit one file per `(dataproc, setor)`.
+  * The extract guard is `isEmpty`, which a driver-local source answers
+  * without a job, and the raw stocks read passes the files' known schema
+  * instead of inferring it from the footers.
   */
 object Jobs {
+
+  /** The extract guard (`extract_stocks_job.py:363-365`). */
+  private[pipeline] def requireRows(raw: DataFrame): Unit =
+    require(!raw.isEmpty, "extraction yielded 0 rows")
+
+  /** The planner's size estimate for `df`: exact for a driver-local
+    * relation, `spark.sql.defaultSizeInBytes` when it has no statistics.
+    */
+  private def planBytes(df: DataFrame): BigInt =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes
 
   final case class Config(rawStocks: String, rawNews: String,
                           refinedStocks: String, refinedNews: String,
@@ -33,7 +61,8 @@ object Jobs {
     import spark.implicits._
     val dim = Model.stockDim.toDF("Sector", "Ticker", "Company")
     val raw = source.fetchQuotes(spark, Model.stockDim.map(_._2))
-    require(raw.limit(1).count() > 0, "extraction yielded 0 rows") // :363-365 guard
+    requireRows(raw)
+    val n = ParquetIO.sizedPartitions(spark, planBytes(raw))
 
     val typed = CleanOps.nanSafeCast(raw.select(
         "Date", "Ticker", "Close", "High", "Low", "Open", "Volume"),
@@ -45,7 +74,7 @@ object Jobs {
       joined.columns.map(c => c -> c.toLowerCase).toMap)
     val tagged = CleanOps.withProcessDate(renamed, cfg.processDate)
 
-    ParquetIO.writePartitioned(tagged, cfg.rawStocks, Seq("dataproc"),
+    ParquetIO.writePartitioned(tagged.coalesce(n), cfg.rawStocks, Seq("dataproc"),
       disableDictionary = true)
     Catalog.ensureDatabase(spark, cfg.stockDb)
     Catalog.createExternalTable(spark, cfg.stockDb, "stock_prices_best_row",
@@ -58,8 +87,9 @@ object Jobs {
     */
   def extractNews(spark: SparkSession, source: NewsSource, cfg: Config): Unit = {
     val raw = source.fetchNews(spark, Model.stockDim.map(d => d._2 -> d._3))
+    val n = ParquetIO.sizedPartitions(spark, planBytes(raw))
     val tagged = CleanOps.withProcessDate(raw, cfg.processDate)
-    ParquetIO.writePartitioned(tagged, cfg.rawNews, Seq("dataproc"))
+    ParquetIO.writePartitioned(tagged.coalesce(n), cfg.rawNews, Seq("dataproc"))
     Catalog.ensureDatabase(spark, cfg.newsDb)
     Catalog.dropTable(spark, cfg.newsDb, "news_raw") // recreate-fresh (:326)
     Catalog.createExternalTable(spark, cfg.newsDb, "news_raw",
@@ -68,14 +98,17 @@ object Jobs {
   }
 
   /** TransformStocksJob (`transform_stocks_job.py`): read one raw partition
-    * (S4, pruned) → date cast + validity filters (P4/P5) → Portuguese rename
-    * (P2) → per-sector aggregates attached (A1+J2, one shuffle) → lag-window
-    * variation (W1, P12, P7) → two-level partitioned refined write (K2).
+    * (S4, pruned, known schema) → date cast + validity filters (P4/P5) →
+    * Portuguese rename (P2) → the one shuffle, on `setor` → per-sector
+    * aggregates attached (A1+J2) → lag-window variation (W1, P12, P7) →
+    * two-level partitioned refined write (K2).
     */
   def transformStocks(spark: SparkSession, cfg: Config): Unit = {
     import spark.implicits._
+    val n = ParquetIO.sizedPartitions(spark,
+      ParquetIO.onDiskBytes(spark, s"${cfg.rawStocks}/dataproc=${cfg.processDate}"))
     val raw = ParquetIO.readPartitioned(spark, cfg.rawStocks,
-      Map("dataproc" -> cfg.processDate))
+      Map("dataproc" -> cfg.processDate), Some(Model.stockRawFileSchema))
 
     val cleaned = CleanOps.filterValid(
       CleanOps.castColumns(raw, Map("date" -> DateType, "close" -> DoubleType,
@@ -89,14 +122,17 @@ object Jobs {
       "low" -> "precoMinimo", "open" -> "precoAbertura",
       "volume" -> "volumeNegociacao", "sector" -> "setor"))
 
-    val withAggs = JoinOps.withGroupAggregates(renamed, Seq("setor"), Seq(
+    val bySector = renamed.repartition(n, $"setor")
+    val withAggs = JoinOps.withGroupAggregates(bySector, Seq("setor"), Seq(
       "mediaFechamento" -> avg($"precoFechamento"),
       "totalVolume" -> sum($"volumeNegociacao")))
 
     // lagDelta computes-and-drops the reference's fechamentoAnterior helper
-    // column internally (the P7 drop at transform_stocks_job.py:198)
-    val withVar = WindowOps.lagDelta(withAggs, Seq("codigoAcao"), Seq($"data".asc),
-      "precoFechamento", "variacaoFechamento")
+    // column internally (the P7 drop at transform_stocks_job.py:198). The
+    // reference partitions by ticker alone; adding its one sector keeps
+    // the rows already clustered by the shuffle above
+    val withVar = WindowOps.lagDelta(withAggs, Seq("setor", "codigoAcao"),
+      Seq($"data".asc), "precoFechamento", "variacaoFechamento")
 
     ParquetIO.writePartitioned(
       CleanOps.withProcessDate(withVar, cfg.processDate),
@@ -110,11 +146,14 @@ object Jobs {
 
   /** TransformNewsJob (`transform_news_job.py`): catalog scan (S5) → dynamic
     * schema normalization (P11) → ISO truncate + parse (P8/P9) → same-day
-    * filter (P6) → drop helpers (P7) → full-row + keyed dedup (A4/A5) →
-    * na.drop (P10) → partitioned refined write + catalog (K1/K3-equivalent).
+    * filter (P6) → drop helpers (P7) → the one shuffle, on `link` →
+    * full-row + keyed dedup (A4/A5) → na.drop (P10) → partitioned refined
+    * write + catalog (K1/K3-equivalent).
     */
   def transformNews(spark: SparkSession, cfg: Config): Unit = {
     import spark.implicits._
+    // news_raw is the table extractNews registers over cfg.rawNews
+    val n = ParquetIO.sizedPartitions(spark, ParquetIO.onDiskBytes(spark, cfg.rawNews))
     val raw = Catalog.readTable(spark, cfg.newsDb, "news_raw")
 
     val normalized = SchemaOps.normalizeToStringSchema(
@@ -136,7 +175,7 @@ object Jobs {
       "published_date_str", "extracted_date_str", "published_date", "extracted_date")
 
     val deduped = AggOps.dedupByKeyOrdered(
-      AggOps.distinctRows(dropped),
+      AggOps.distinctRows(dropped.repartition(n, $"link")),
       Seq("link"), Seq($"extracted_at".asc, $"title".asc))
     val complete = CleanOps.dropNullsIn(deduped, Seq("title", "link", "source"))
 

@@ -7,10 +7,29 @@ import org.apache.spark.sql.types._
   */
 object Model {
 
-  /** The 10-row (sector, ticker, company) dimension
-    * (`extract_stocks_job.py:40-74`).
+  /** Thrown when a (sector, ticker, company) dimension lists a ticker more
+    * than once. The transforms rely on each ticker having exactly one
+    * sector: rows hash-partitioned on the sector already hold every row of
+    * each of its tickers, so the per-ticker lag needs no exchange of its own.
     */
-  val stockDim: Seq[(String, String, String)] = Seq(
+  final class DuplicateTickerException(val tickers: Seq[String])
+    extends IllegalArgumentException(
+      s"stock dimension lists ticker(s) more than once: ${tickers.mkString(", ")}")
+
+  /** `dim` itself, or [[DuplicateTickerException]] naming the tickers that
+    * appear in more than one row. Driver-side, no job.
+    */
+  def requireUniqueTickers(
+      dim: Seq[(String, String, String)]): Seq[(String, String, String)] = {
+    val dups = dim.groupBy(_._2).collect { case (t, rows) if rows.size > 1 => t }
+    if (dups.nonEmpty) throw new DuplicateTickerException(dups.toSeq.sorted)
+    dim
+  }
+
+  /** The 10-row (sector, ticker, company) dimension
+    * (`extract_stocks_job.py:40-74`), checked at initialisation.
+    */
+  val stockDim: Seq[(String, String, String)] = requireUniqueTickers(Seq(
     ("Banks", "ITUB4.SA", "Itau Unibanco"),
     ("Banks", "BBDC4.SA", "Bradesco"),
     ("Banks", "BBAS3.SA", "Banco do Brasil"),
@@ -21,7 +40,7 @@ object Model {
     ("Insurance", "BBSE3.SA", "BB Seguridade"),
     ("Telecommunications", "VIVT3.SA", "Vivo"),
     ("Telecommunications", "TIMS3.SA", "TIM Brasil"),
-  )
+  ))
 
   /** Raw OHLCV long-form row as produced by ingestion (post-unpivot):
     * date is a `yyyy-MM-dd` STRING in the raw zone by design (§1.2).
@@ -36,6 +55,14 @@ object Model {
     StructField("low", DoubleType), StructField("open", DoubleType),
     StructField("volume", LongType), StructField("sector", StringType),
     StructField("company", StringType)))
+
+  /** The raw stocks files as `extractStocks` writes them, partition column
+    * included: the dim join puts its key `ticker` first, so the file order
+    * differs from [[stockRawSchema]]'s.
+    */
+  val stockRawFileSchema: StructType = StructType(
+    ("ticker" +: stockRawSchema.fieldNames.filter(_ != "ticker").toSeq)
+      .map(stockRawSchema(_)) :+ StructField("dataproc", StringType))
 
   /** Refined-zone Portuguese schema (`transform_stocks_job.py:66-84`),
     * data columns only (partitions: dataproc, setor).

@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 import graft.ops.CleanOps
@@ -31,6 +33,8 @@ trait NewsSource {
 /** Fixture-backed sources for tests/hermetic runs. Driver-side string
   * sanitation (P13) applies exactly where the reference does it — at
   * ingest, before `createDataFrame` (`extract_news_job.py:142-155`).
+  * Both build driver-local relations, so the planner knows their size
+  * and an emptiness check on them launches no job.
   */
 final class FixtureQuoteSource(rows: Seq[Model.RawQuote]) extends QuoteSource {
   def fetchQuotes(spark: SparkSession, tickers: Seq[String]): DataFrame = {
@@ -46,7 +50,6 @@ final class FixtureNewsSource(rows: Seq[Seq[String]]) extends NewsSource {
       case s: String => CleanOps.sanitizeString(s)
       case other => other
     }))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(sanitized), Model.newsRawSchema)
+    spark.createDataFrame(sanitized.asJava, Model.newsRawSchema)
   }
 }

@@ -2469,9 +2469,7 @@ object ExtQueries {
         // (ScaleCheck's timings expose it as a step, not noise).
         val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
         try {
-          val liPath = new org.apache.hadoop.fs.Path(s"$dir/lineitem.parquet")
-          val liBytes = liPath.getFileSystem(spark.sessionState.newHadoopConf())
-            .getContentSummary(liPath).getLength
+          val liBytes = graft.io.ParquetIO.onDiskBytes(spark, s"$dir/lineitem.parquet")
           val oneWave = spark.sparkContext.defaultParallelism.toLong
           spark.conf.set("spark.sql.shuffle.partitions",
             math.max(8L, math.min(oneWave, liBytes / 12500000L)).toString)
