@@ -18,17 +18,6 @@ import org.apache.spark.sql.types._
   */
 object StreamOps {
 
-  /** Root for stream scratch space — landing drops, memory-sink checkpoints,
-    * snapshot swap dirs. Micro-batch progress is dozens of TINY files per
-    * trigger (offsets, commits, state-store deltas), each behind a
-    * write+rename barrier: on a spinning/virtual disk that metadata churn IS
-    * the micro-batch floor. Prefer the RAM-backed tmpfs when present (the
-    * local-mode analogue of putting state-store + checkpoint dirs on
-    * executor-local NVMe, which is how you'd deploy on a real cluster);
-    * `GRAFT_STREAM_TMP` overrides, `java.io.tmpdir` is the fallback.
-    */
-  def tmpRoot: String = graft.Scratch.root
-
   /** Shuffle-partition count the stream gates pin for their stateful
     * stages (state-store instances and their per-trigger commit machinery
     * scale with partition count, and gate-scale micro-batches are
@@ -63,33 +52,23 @@ object StreamOps {
     raw.toBoolean
   }
 
-  /** Expression-level codegen factory for the same scope (A/B knob only —
-    * engine default kept): whole-stage OFF still leaves UnsafeProjection/
-    * predicate/ordering codegen on the expression path, and the incremental
-    * planner bakes per-batch literals (watermark timestamps) into THOSE
-    * sources too — at sf0.1 steady state, all 198 janino compiles left
-    * inside the timed loop sit in the stream gates with whole-stage already
-    * pinned off, and NO_CODEGEN (the engine's own interpreted-fallback
-    * path, semantically identical) removes 154 of them. Measured r19,
-    * interleaved ROUNDS=3 on the 13-gate block: FALLBACK 8.17/8.98 s vs
-    * NO_CODEGEN 8.98/8.83 s — sign-inconsistent, the per-trigger expression
-    * compiles are off the critical path, so the default stays FALLBACK
-    * (interpreted projections are also the wrong scale posture).
+  /** Runs `body` with [[streamWholeStageCodegen]] pinned. Expression-level
+    * codegen (`spark.sql.codegen.factoryMode`) stays at the engine default,
+    * FALLBACK: the incremental planner bakes per-batch watermark literals
+    * into those sources too (NO_CODEGEN removes 154 of the 198 steady-loop
+    * compiles at sf0.1), but r19's interleaved ROUNDS=3 A/B on the 13-gate
+    * block was sign-inconsistent (FALLBACK 8.17/8.98 s vs NO_CODEGEN
+    * 8.98/8.83 s; OPTIMIZATION_r19.md), and interpreted projections are the
+    * wrong posture at scale.
     */
-  private def streamFactoryMode: String =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_FACTORY", "FALLBACK")
-
   private def withStreamCodegen[T](spark: org.apache.spark.sql.SparkSession)
                                   (body: => T): T = {
     val key = "spark.sql.codegen.wholeStage"
-    val fKey = "spark.sql.codegen.factoryMode"
     val prev = spark.conf.get(key)
-    val prevF = spark.conf.get(fKey, "FALLBACK")
     try {
       spark.conf.set(key, streamWholeStageCodegen.toString)
-      spark.conf.set(fKey, streamFactoryMode)
       body
-    } finally { spark.conf.set(key, prev); spark.conf.set(fKey, prevF) }
+    } finally spark.conf.set(key, prev)
   }
 
   /** Events schema of the LANDING drops: the landing is written from
@@ -178,7 +157,7 @@ object StreamOps {
   private val landings = scala.collection.concurrent.TrieMap.empty[String, String]
   def eventsLanding(spark: SparkSession, dir: String, files: Int = 2): String =
     landings.getOrElseUpdate(s"$dir#$files", {
-      val path = s"$tmpRoot/graft_stream_" +
+      val path = s"${graft.Scratch.root}/graft_stream_" +
         s"${ProcessHandle.current().pid()}_${(dir + files).hashCode.toHexString}"
       graft.Tables.events(spark, dir) // ts normalized to TimestampType
         .repartition(files, org.apache.spark.sql.functions.col("event_id"))
@@ -201,7 +180,7 @@ object StreamOps {
       // mtimes — still older than the sentinel written below) instead of
       // re-writing the whole events table a second time per JVM
       val src = new java.io.File(eventsLanding(spark, dir))
-      val base = s"$tmpRoot/graft_stream_" +
+      val base = s"${graft.Scratch.root}/graft_stream_" +
         s"${ProcessHandle.current().pid()}_sent_${dir.hashCode.toHexString}"
       val dst = new java.io.File(base)
       dst.mkdirs()
@@ -230,7 +209,7 @@ object StreamOps {
   def eventsLandingWithDuplicates(spark: SparkSession, dir: String): String =
     landings.getOrElseUpdate(s"$dir#dups", {
       val src = new java.io.File(eventsLanding(spark, dir))
-      val base = s"$tmpRoot/graft_stream_" +
+      val base = s"${graft.Scratch.root}/graft_stream_" +
         s"${ProcessHandle.current().pid()}_dup_${dir.hashCode.toHexString}"
       val dst = new java.io.File(base)
       dst.mkdirs()
@@ -660,7 +639,7 @@ object StreamOps {
   def ordersChangesLanding(spark: SparkSession, dir: String): String =
     landings.getOrElseUpdate(s"$dir#cdc", {
       import org.apache.spark.sql.functions._
-      val path = s"$tmpRoot/graft_stream_" +
+      val path = s"${graft.Scratch.root}/graft_stream_" +
         s"${ProcessHandle.current().pid()}_cdc_${dir.hashCode.toHexString}"
       val o = graft.Tables.orders(spark, dir)
       val u = o.filter(col("o_orderkey") % 10 === 0)
